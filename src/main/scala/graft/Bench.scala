@@ -1,4 +1,6 @@
 package graft
+import scala.util.control.NonFatal
+
 import org.apache.spark.sql.SparkSession
 object Bench {
   /** Full materialization via the noop DSv2 sink — every output column
@@ -32,12 +34,12 @@ object Bench {
     // warmup matters most: the first StreamingQuery in a session pays
     // ~2.5s of one-time machinery init (state store, commit log, sink
     // classes, JIT) that otherwise lands on one measured query.
-    try materialize(SparkEntry.entry(spark)) catch { case _: Throwable => }
+    try materialize(SparkEntry.entry(spark)) catch { case NonFatal(_) => }
     try {
       materialize(SparkEntry.queries("s5_stream_complete")(spark, "/root/testdata/sf0.001"))
       spark.catalog.clearCache()
       spark.sqlContext.tableNames().foreach(spark.catalog.dropTempView)
-    } catch { case _: Throwable => }
+    } catch { case NonFatal(_) => }
     // host-contention self-adjudication (round-10 verdict item #3):
     // every round since r2 some entries inflate 2-30x under external
     // load and settling "regression or noise?" has needed a judge
@@ -58,23 +60,39 @@ object Bench {
     // single-shot total is dominated by where that stall lands. Caches
     // and sink tables are cleared between runs, so run 2 re-executes
     // the full plan — only JIT/page-cache warmth carries over.
-    val results = SparkEntry.queries.map { case (name, fn) =>
-      val runs = (1 to 2).map { _ =>
+    //
+    // A query that throws in either run is not timed: it is listed under
+    // "failed" with its error class, and its time stays out of
+    // "queries", "top_queries" and the total.
+    val attempts = SparkEntry.queries.map { case (name, fn) =>
+      name -> (1 to 2).map { _ =>
         val l0 = loadAvg
         val c0 = CpuMeter.snap()
         val t0 = System.nanoTime()
-        try { materialize(fn(spark, sfDir)) } catch { case _: Throwable => () }
+        val err =
+          try { materialize(fn(spark, sfDir)); None }
+          catch { case NonFatal(e) =>
+            System.err.println(s"[bench] $name failed: $e")
+            Some(e.getClass.getName)
+          }
         val t = (System.nanoTime() - t0) / 1e9
         val cd = CpuMeter.delta(c0, CpuMeter.snap())
-        // streaming queries leave memory-sink tables behind; drop them
-        // so driver heap doesn't degrade later queries
+        // drop cached relations and temp views a query left behind so
+        // they cannot degrade later queries
         spark.catalog.clearCache()
         spark.sqlContext.tableNames().foreach(spark.catalog.dropTempView)
-        (t, l0, cd)
+        (t, l0, cd, err)
       }
-      // keep the load/CPU deltas sampled around the run that won the
-      // min: that is the run the reported number came from
-      name -> runs.minBy(_._1)
+    }
+    val failed = attempts.toSeq.sortBy(_._1).flatMap { case (name, runs) =>
+      runs.flatMap(_._4).headOption.map(name -> _)
+    }
+    val failedJson = failed
+      .map { case (k, e) => s"""{"query":"$k","error":"$e"}""" }.mkString("[", ",", "]")
+    // keep the load/CPU deltas sampled around the run that won the
+    // min: that is the run the reported number came from
+    val results = attempts.collect { case (name, runs) if runs.forall(_._4.isEmpty) =>
+      name -> runs.map { case (t, l, cd, _) => (t, l, cd) }.minBy(_._1)
     }
     val qs = results.map { case (k, (v, _, _)) => s"\"" + k + "\":" + v }
       .mkString("{", ",", "}")
@@ -114,8 +132,8 @@ object Bench {
       val p = new ProcessBuilder("git", "rev-parse", "--short", "HEAD").start()
       val out = new String(p.getInputStream.readAllBytes(), "UTF-8").trim
       if (p.waitFor() == 0 && out.nonEmpty) out else "unknown"
-    } catch { case scala.util.control.NonFatal(_) => "unknown" }
-    val line = s"""{"metric":"total","value":$total,"unit":"sec","queries":$qs,"load":$loads,"steal_cpu_s":$steals,"iowait_cpu_s":$iowaits,"other_cpu_s":$others,"gc_cpu_s":$gcs,"load_start":${f"$loadStart%.2f"},"load_end":${f"$loadEnd%.2f"},"ncpu":$ncpu,"cpus":$cpus,"sf":"$sfDir","runs_per_query":2,"stat":"min","round":$round,"sha":"$sha"}"""
+    } catch { case NonFatal(_) => "unknown" }
+    val line = s"""{"metric":"total","value":$total,"unit":"sec","queries":$qs,"failed":$failedJson,"load":$loads,"steal_cpu_s":$steals,"iowait_cpu_s":$iowaits,"other_cpu_s":$others,"gc_cpu_s":$gcs,"load_start":${f"$loadStart%.2f"},"load_end":${f"$loadEnd%.2f"},"ncpu":$ncpu,"cpus":$cpus,"sf":"$sfDir","runs_per_query":2,"stat":"min","round":$round,"sha":"$sha"}"""
     // stdout carries a COMPACT line only (total + the 12 slowest
     // queries): the driver's stdout harvester keeps a bounded tail of
     // the sbt output, and the full 154-query line (~7 KB) has started
@@ -135,7 +153,7 @@ object Bench {
     // from 154 to 12 entries instead of failing loudly (round-8 ADVICE)
     val topQs = results.toSeq.sortBy(-_._2._1).take(12)
       .map { case (k, (v, _, _)) => s"\"" + k + "\":" + v }.mkString("{", ",", "}")
-    println(s"""{"metric":"total","value":$total,"unit":"sec","top_queries":$topQs,"n_queries":${results.size},"load_start":${f"$loadStart%.2f"},"load_end":${f"$loadEnd%.2f"},"other_cpu_s_sum":${f"$sumOther%.1f"},"steal_cpu_s_sum":${f"$sumSteal%.1f"},"ncpu":$ncpu,"cpus":$cpus,"sf":"$sfDir","runs_per_query":2,"stat":"min","round":$round,"sha":"$sha","full":"$fullName"}""")
+    println(s"""{"metric":"total","value":$total,"unit":"sec","top_queries":$topQs,"failed":$failedJson,"n_queries":${attempts.size},"load_start":${f"$loadStart%.2f"},"load_end":${f"$loadEnd%.2f"},"other_cpu_s_sum":${f"$sumOther%.1f"},"steal_cpu_s_sum":${f"$sumSteal%.1f"},"ncpu":$ncpu,"cpus":$cpus,"sf":"$sfDir","runs_per_query":2,"stat":"min","round":$round,"sha":"$sha","full":"$fullName"}""")
     // ALSO land the line in a file: the driver's stdout harvester has
     // truncated the sbt tail before (BENCH_r04 kept 63/135 timings), and
     // per-query history is the regression signal — it must survive
@@ -150,7 +168,7 @@ object Bench {
       java.nio.file.StandardOpenOption.APPEND)
     // NonFatal only: a VM error (OOM...) must crash the bench, not be
     // mistaken for a file-write hiccup (round-5 ADVICE)
-    catch { case e if scala.util.control.NonFatal(e) =>
+    catch { case NonFatal(e) =>
       System.err.println(s"bench file write failed: $e") }
     // self-contained per-round artifact (round-6 VERDICT item #8): the
     // driver's stdout harvester has truncated the per-query tail two
@@ -160,7 +178,7 @@ object Bench {
     try java.nio.file.Files.write(
       java.nio.file.Paths.get(fullName),
       (line + "\n").getBytes("UTF-8"))
-    catch { case e if scala.util.control.NonFatal(e) =>
+    catch { case NonFatal(e) =>
       System.err.println(s"bench full-file write failed: $e") }
     spark.stop()
   }

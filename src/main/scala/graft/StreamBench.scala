@@ -36,7 +36,7 @@ import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode
   * not a memory sink's driver-side row buffering (10M update-mode rows
   * would distort driver heap). RocksDB row tracking is ON here — state
   * size IS the measurement, so the read-before-put cost is paid
-  * deliberately (the oracle bench turns it off; see configureStreaming).
+  * deliberately (the oracle runs turn it off; see StreamingOps.runStream).
   *
   * Artifact: one JSON line per query appended to STREAMBENCH_rNN.json —
   * per-batch {rows, totalMs, addBatchMs, commitMs, stateRows,
@@ -54,7 +54,8 @@ object StreamBench {
   def main(args: Array[String]): Unit = {
     JvmOpens.check() // fail fast on a bare-java launch (see JvmOpens)
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/tmp/graft_sf10")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
+    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS",
+      Runtime.getRuntime.availableProcessors.toString)
     val chunks = sys.env.getOrElse("SPARK_GRAFT_STREAM_CHUNKS", "20").toInt
     // comma-separated layout filter for big replays (100M-row runs pay
     // ~10 min/layout; the third-decade evidence only needs the bounded

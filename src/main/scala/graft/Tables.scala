@@ -71,6 +71,30 @@ object Tbl {
   def documents(s: SparkSession, d: String): DataFrame  = apply(s, d, "documents")
   def embeddings(s: SparkSession, d: String): DataFrame = apply(s, d, "embeddings")
 
+  /** Runs `body` with `settings` applied to the session conf, then puts
+    * every key back: re-set if the session had set it, unset if not. The
+    * snapshot is `getAll`, not `getOption`, which reports a key's
+    * default as if it were set. Queries run one at a time on a session,
+    * so the scoped change cannot race another query. */
+  def withConf[T](s: SparkSession, settings: Seq[(String, String)])(body: => T): T = {
+    val before = s.conf.getAll
+    settings.foreach { case (k, v) => s.conf.set(k, v) }
+    try body finally settings.map(_._1).distinct.foreach { k =>
+      before.get(k) match {
+        case Some(v) => s.conf.set(k, v)
+        case None => s.conf.unset(k)
+      }
+    }
+  }
+
+  /** Registers `views` as temp views while `body` builds a SQL-text
+    * query over them, then drops them. Analysis resolves each view into
+    * the built DataFrame, so the result executes without them. */
+  def withViews[T](s: SparkSession, views: (String, DataFrame)*)(body: => T): T = {
+    views.foreach { case (name, df) => df.createOrReplaceTempView(name) }
+    try body finally views.foreach { case (name, _) => s.catalog.dropTempView(name) }
+  }
+
   /** Throwaway scratch dir (stream checkpoints, temp sinks): prefer the
     * tmpfs at /dev/shm over the disk-backed /tmp — state-store commits
     * and checkpoint fsyncs are pure overhead for AvailableNow runs. */

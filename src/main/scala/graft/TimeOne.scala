@@ -10,8 +10,9 @@ import org.apache.spark.sql.SparkSession
 object TimeOne {
   def main(args: Array[String]): Unit = {
     JvmOpens.check() // fail fast on a bare-java launch (see JvmOpens)
-    val b = SparkSession.builder().master("local[32]")
-      .config("spark.sql.shuffle.partitions", "32")
+    val cpus = Runtime.getRuntime.availableProcessors.toString
+    val b = SparkSession.builder().master(s"local[$cpus]")
+      .config("spark.sql.shuffle.partitions", cpus)
       // memory-sink streams at sf10 outgrow the 1g default (see Verify)
       .config("spark.driver.maxResultSize", "8g")
       .config("spark.ui.enabled", "false")

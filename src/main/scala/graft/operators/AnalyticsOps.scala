@@ -42,15 +42,16 @@ object AnalyticsOps extends QueryModule {
     * engine's full SQL surface is part of the contract, not just the
     * DataFrame DSL. */
   private def groupingSets(s: SparkSession, d: String): DataFrame = {
-    Tbl.events(s, d).createOrReplaceTempView("ev_gs")
-    s.sql(
-      """SELECT coalesce(event_type, '(all)') AS etype,
-        |       CAST(coalesce(user_id % 10, -1) AS BIGINT) AS user_mod,
-        |       count(*) AS n,
-        |       sum(CAST(round(value*100) AS BIGINT)) AS v_c
-        |FROM ev_gs
-        |GROUP BY GROUPING SETS ((event_type), (user_id % 10), ())
-        |ORDER BY etype, user_mod""".stripMargin)
+    Tbl.withViews(s, "ev_gs" -> Tbl.events(s, d)) {
+      s.sql(
+        """SELECT coalesce(event_type, '(all)') AS etype,
+          |       CAST(coalesce(user_id % 10, -1) AS BIGINT) AS user_mod,
+          |       count(*) AS n,
+          |       sum(CAST(round(value*100) AS BIGINT)) AS v_c
+          |FROM ev_gs
+          |GROUP BY GROUPING SETS ((event_type), (user_id % 10), ())
+          |ORDER BY etype, user_mod""".stripMargin)
+    }
   }
 
   // Outer CAST: DuckDB types sum(BIGINT) as HUGEINT; Spark as BIGINT.
@@ -426,20 +427,21 @@ object AnalyticsOps extends QueryModule {
     * Semantics: urgent-free customers' orders strictly above their own
     * customer's average price. */
   private def correlatedSubquery(s: SparkSession, d: String): DataFrame = {
-    Tbl.orders(s, d).createOrReplaceTempView("ord_cs")
-    s.sql(
-      """SELECT o_orderkey, o_custkey,
-        |       CAST(round(o_totalprice*100) AS BIGINT) AS price_c
-        |FROM ord_cs o
-        |WHERE CAST(round(o_totalprice*100) AS BIGINT)
-        |        * (SELECT count(*) FROM ord_cs i
-        |           WHERE i.o_custkey = o.o_custkey)
-        |      > (SELECT sum(CAST(round(i.o_totalprice*100) AS BIGINT))
-        |         FROM ord_cs i WHERE i.o_custkey = o.o_custkey)
-        |  AND NOT EXISTS (SELECT 1 FROM ord_cs i
-        |                  WHERE i.o_custkey = o.o_custkey
-        |                    AND i.o_orderpriority = '1-URGENT')
-        |ORDER BY o_orderkey""".stripMargin)
+    Tbl.withViews(s, "ord_cs" -> Tbl.orders(s, d)) {
+      s.sql(
+        """SELECT o_orderkey, o_custkey,
+          |       CAST(round(o_totalprice*100) AS BIGINT) AS price_c
+          |FROM ord_cs o
+          |WHERE CAST(round(o_totalprice*100) AS BIGINT)
+          |        * (SELECT count(*) FROM ord_cs i
+          |           WHERE i.o_custkey = o.o_custkey)
+          |      > (SELECT sum(CAST(round(i.o_totalprice*100) AS BIGINT))
+          |         FROM ord_cs i WHERE i.o_custkey = o.o_custkey)
+          |  AND NOT EXISTS (SELECT 1 FROM ord_cs i
+          |                  WHERE i.o_custkey = o.o_custkey
+          |                    AND i.o_orderpriority = '1-URGENT')
+          |ORDER BY o_orderkey""".stripMargin)
+    }
   }
 
   private val correlatedSubquerySql =
@@ -480,11 +482,15 @@ object AnalyticsOps extends QueryModule {
     // so the closure is exactly Σ depth(node) ≤ ~7·|parts| rows — and
     // already exceeds 1M at 200k parts. Raise the guard, don't fight
     // it: the termination property comes from the monotone key
-    // division, not from the limit.
-    s.conf.set("spark.sql.cteRecursionRowLimit", Int.MaxValue.toString)
-    Tbl.part(s, d).createOrReplaceTempView("part_rh")
-    Tbl.lineitem(s, d).createOrReplaceTempView("li_rh")
-    s.sql(recursiveHierarchyQuery("part_rh", "li_rh"))
+    // division, not from the limit. The recursion reads the limit when
+    // it EXECUTES, so the query is built on a clone of the session that
+    // carries the raised limit and the two views; the caller's session
+    // is left as it was.
+    val rs = org.apache.spark.sql.graft.SessionClone(s)
+    rs.conf.set("spark.sql.cteRecursionRowLimit", Int.MaxValue.toString)
+    Tbl.part(rs, d).createOrReplaceTempView("part_rh")
+    Tbl.lineitem(rs, d).createOrReplaceTempView("li_rh")
+    rs.sql(recursiveHierarchyQuery("part_rh", "li_rh"))
   }
 
   private def recursiveHierarchyQuery(part: String, li: String) =
@@ -528,9 +534,9 @@ object AnalyticsOps extends QueryModule {
     * certifies the FRONT DOOR, that one the bounded-buffer fast
     * path. */
   private def lateralTopk(s: SparkSession, d: String): DataFrame = {
-    Tbl.customer(s, d).createOrReplaceTempView("cust_lt")
-    Tbl.orders(s, d).createOrReplaceTempView("ord_lt")
-    s.sql(lateralTopkQuery("cust_lt", "ord_lt"))
+    Tbl.withViews(s, "cust_lt" -> Tbl.customer(s, d), "ord_lt" -> Tbl.orders(s, d)) {
+      s.sql(lateralTopkQuery("cust_lt", "ord_lt"))
+    }
   }
   private def lateralTopkQuery(cust: String, ord: String) =
     s"""SELECT c.c_custkey, c.c_mktsegment, t.o_orderkey, t.o_totalprice
@@ -761,19 +767,21 @@ object AnalyticsOps extends QueryModule {
     * (LISTAGG over raw 10¹²-row groups is an anti-pattern regardless
     * of engine). DuckDB oracles both via string_agg(... ORDER BY). */
   private def listaggRollup(s: SparkSession, d: String): DataFrame = {
-    Tbl.nation(s, d).createOrReplaceTempView("nation_la")
-    Tbl.region(s, d).createOrReplaceTempView("region_la")
-    Tbl.events(s, d).createOrReplaceTempView("events_la")
-    s.sql("""
-      |SELECT 'region:' || r_name AS grp,
-      |       listagg(n_name, ',') WITHIN GROUP (ORDER BY n_name) AS members
-      |FROM nation_la JOIN region_la ON n_regionkey = r_regionkey
-      |GROUP BY r_name
-      |UNION ALL
-      |SELECT 'cohort:' || CAST(user_id % 20 AS STRING) AS grp,
-      |       array_join(sort_array(collect_set(event_type)), ',') AS members
-      |FROM events_la GROUP BY user_id % 20
-      |ORDER BY grp""".stripMargin)
+    Tbl.withViews(s,
+        "nation_la" -> Tbl.nation(s, d),
+        "region_la" -> Tbl.region(s, d),
+        "events_la" -> Tbl.events(s, d)) {
+      s.sql("""
+        |SELECT 'region:' || r_name AS grp,
+        |       listagg(n_name, ',') WITHIN GROUP (ORDER BY n_name) AS members
+        |FROM nation_la JOIN region_la ON n_regionkey = r_regionkey
+        |GROUP BY r_name
+        |UNION ALL
+        |SELECT 'cohort:' || CAST(user_id % 20 AS STRING) AS grp,
+        |       array_join(sort_array(collect_set(event_type)), ',') AS members
+        |FROM events_la GROUP BY user_id % 20
+        |ORDER BY grp""".stripMargin)
+    }
   }
 
   private val listaggRollupSql =
@@ -1028,12 +1036,12 @@ object AnalyticsOps extends QueryModule {
     // their timed region (`materialize(fn(spark, dir))` — argument
     // evaluation is timed), so published walls DO include the scan;
     // only a consumer that times `.collect()` on a pre-built DataFrame
-    // would under-state it. The session-level temp names (ev_sqludf,
-    // ev_sqludf_grid, graft_*) assume SEQUENTIAL execution within a
+    // would under-state it. The session-level temp names (views
+    // ev_sqludf and ev_sqludf_grid, dropped once the query is built;
+    // functions graft_*) assume SEQUENTIAL execution within a
     // session — two concurrent invocations in one session would race on
     // CREATE OR REPLACE (the registry harnesses run queries one at a
     // time; a concurrent deployment would suffix a run id).
-    Tbl.events(s, d).createOrReplaceTempView("ev_sqludf")
     s.sql("CREATE OR REPLACE TEMPORARY FUNCTION graft_vc(v DOUBLE) " +
       "RETURNS BIGINT RETURN CAST(round(v * 100) AS BIGINT)")
     // nested: graft_tier's body calls graft_vc
@@ -1046,25 +1054,28 @@ object AnalyticsOps extends QueryModule {
     // busy-flag) grid (≤30 rows, counts/sums re-fold associatively);
     // localCheckpoint cuts lineage so the main SELECT and the TVF body
     // both read the grid instead of re-scanning events
-    s.sql(
-      """SELECT event_type, graft_tier(value) AS tier,
-        |       value >= 100.0 AS busy,
-        |       count(*) AS n, sum(graft_vc(value)) AS v_c
-        |FROM ev_sqludf GROUP BY 1, 2, 3""".stripMargin)
-      .localCheckpoint()
-      .createOrReplaceTempView("ev_sqludf_grid")
-    s.sql("CREATE OR REPLACE TEMPORARY FUNCTION graft_busy(want BOOLEAN) " +
-      "RETURNS TABLE(event_type STRING, n BIGINT, v_c BIGINT) " +
-      "RETURN SELECT event_type, sum(n) AS n, sum(v_c) AS v_c " +
-      "FROM ev_sqludf_grid WHERE busy = want GROUP BY event_type")
-    s.sql(
-      """SELECT graft_label(event_type, tier) AS lbl, sum(n) AS n,
-        |       sum(v_c) AS v_c
-        |FROM ev_sqludf_grid GROUP BY 1
-        |UNION ALL
-        |SELECT concat('busy100:', event_type), n, v_c
-        |FROM graft_busy(true)
-        |ORDER BY lbl""".stripMargin)
+    val grid = Tbl.withViews(s, "ev_sqludf" -> Tbl.events(s, d)) {
+      s.sql(
+        """SELECT event_type, graft_tier(value) AS tier,
+          |       value >= 100.0 AS busy,
+          |       count(*) AS n, sum(graft_vc(value)) AS v_c
+          |FROM ev_sqludf GROUP BY 1, 2, 3""".stripMargin)
+        .localCheckpoint()
+    }
+    Tbl.withViews(s, "ev_sqludf_grid" -> grid) {
+      s.sql("CREATE OR REPLACE TEMPORARY FUNCTION graft_busy(want BOOLEAN) " +
+        "RETURNS TABLE(event_type STRING, n BIGINT, v_c BIGINT) " +
+        "RETURN SELECT event_type, sum(n) AS n, sum(v_c) AS v_c " +
+        "FROM ev_sqludf_grid WHERE busy = want GROUP BY event_type")
+      s.sql(
+        """SELECT graft_label(event_type, tier) AS lbl, sum(n) AS n,
+          |       sum(v_c) AS v_c
+          |FROM ev_sqludf_grid GROUP BY 1
+          |UNION ALL
+          |SELECT concat('busy100:', event_type), n, v_c
+          |FROM graft_busy(true)
+          |ORDER BY lbl""".stripMargin)
+    }
   }
 
   // Oracle inlines every UDF body — the pinned contract is that the
@@ -1136,16 +1147,17 @@ object AnalyticsOps extends QueryModule {
     * nested-SELECT spelling — the oracle states it in classic SQL, so
     * the hash-match proves the syntax is pure sugar. */
   private def pipeSyntax(s: SparkSession, d: String): DataFrame = {
-    Tbl.events(s, d).createOrReplaceTempView("ev_pipe")
-    s.sql(
-      """FROM ev_pipe
-        ||> WHERE value >= 5
-        ||> EXTEND CAST(round(value * 100) AS BIGINT) AS v_c
-        ||> EXTEND v_c * 2 AS v2_c
-        ||> AGGREGATE count(*) AS n, sum(v_c) AS v_c_sum,
-        |             sum(v2_c) AS v2_sum
-        |   GROUP BY event_type
-        ||> ORDER BY event_type""".stripMargin)
+    Tbl.withViews(s, "ev_pipe" -> Tbl.events(s, d)) {
+      s.sql(
+        """FROM ev_pipe
+          ||> WHERE value >= 5
+          ||> EXTEND CAST(round(value * 100) AS BIGINT) AS v_c
+          ||> EXTEND v_c * 2 AS v2_c
+          ||> AGGREGATE count(*) AS n, sum(v_c) AS v_c_sum,
+          |             sum(v2_c) AS v2_sum
+          |   GROUP BY event_type
+          ||> ORDER BY event_type""".stripMargin)
+    }
   }
 
   private val pipeSyntaxSql =

@@ -227,7 +227,6 @@ object CurationOps extends QueryModule {
   private def tableSample(s: SparkSession, d: String): DataFrame = {
     import s.implicits._
     val view = "events_tablesample"
-    Tbl.events(s, d).createOrReplaceTempView(view)
     val bucket =
       conv(substring(md5($"event_id".cast("string")), 1, 8), 16, 10)
         .cast("long") % 100
@@ -235,16 +234,18 @@ object CurationOps extends QueryModule {
       .groupBy($"event_type")
       .agg(count(lit(1)).as("n_exact"),
            sum(when(bucket < 10, 1L).otherwise(0L)).as("n_det"))
-    val sampleA = s.sql(
-      s"""SELECT event_type, count(*) AS n_a, sum(event_id) AS ids_a
-         |FROM $view TABLESAMPLE (10 PERCENT) REPEATABLE (42)
-         |GROUP BY event_type""".stripMargin)
-    // event_id >= 0 admits every row but makes this plan canonically
-    // different from sampleA's: no ReuseExchange, the sampler re-runs
-    val sampleB = s.sql(
-      s"""SELECT event_type, count(*) AS n_b, sum(event_id) AS ids_b
-         |FROM $view TABLESAMPLE (10 PERCENT) REPEATABLE (42)
-         |WHERE event_id >= 0 GROUP BY event_type""".stripMargin)
+    val (sampleA, sampleB) = Tbl.withViews(s, view -> Tbl.events(s, d)) {
+      (s.sql(
+        s"""SELECT event_type, count(*) AS n_a, sum(event_id) AS ids_a
+           |FROM $view TABLESAMPLE (10 PERCENT) REPEATABLE (42)
+           |GROUP BY event_type""".stripMargin),
+       // event_id >= 0 admits every row but makes this plan canonically
+       // different from sampleA's: no ReuseExchange, the sampler re-runs
+       s.sql(
+        s"""SELECT event_type, count(*) AS n_b, sum(event_id) AS ids_b
+           |FROM $view TABLESAMPLE (10 PERCENT) REPEATABLE (42)
+           |WHERE event_id >= 0 GROUP BY event_type""".stripMargin))
+    }
     exact.join(sampleA, Seq("event_type")).join(sampleB, Seq("event_type"))
       .select($"event_type", $"n_exact", $"n_det",
               (abs($"n_a" - $"n_exact" * 0.1) <=

@@ -365,12 +365,12 @@ object RelationalOps extends QueryModule {
 
   private def joinHints(s: SparkSession, d: String): DataFrame = {
     import s.implicits._
-    Tbl.customer(s, d).createOrReplaceTempView("cust_jh")
-    Tbl.nation(s, d).createOrReplaceTempView("nat_jh")
-    joinHintVariant(s, "BROADCAST(n)", "broadcast")
-      .unionAll(joinHintVariant(s, "SHUFFLE_MERGE(n)", "merge"))
-      .unionAll(joinHintVariant(s, "SHUFFLE_HASH(n)", "shuffle_hash"))
-      .orderBy($"strategy", $"n_name")
+    Tbl.withViews(s, "cust_jh" -> Tbl.customer(s, d), "nat_jh" -> Tbl.nation(s, d)) {
+      joinHintVariant(s, "BROADCAST(n)", "broadcast")
+        .unionAll(joinHintVariant(s, "SHUFFLE_MERGE(n)", "merge"))
+        .unionAll(joinHintVariant(s, "SHUFFLE_HASH(n)", "shuffle_hash"))
+        .orderBy($"strategy", $"n_name")
+    }
   }
 
   private val joinHintsSql =
@@ -404,8 +404,9 @@ object RelationalOps extends QueryModule {
        |LIMIT 20 OFFSET 30""".stripMargin
 
   private def offsetLimit(s: SparkSession, d: String): DataFrame = {
-    Tbl.orders(s, d).createOrReplaceTempView("ord_ol")
-    s.sql(offsetLimitQuery("ord_ol"))
+    Tbl.withViews(s, "ord_ol" -> Tbl.orders(s, d)) {
+      s.sql(offsetLimitQuery("ord_ol"))
+    }
   }
 
   override val queries: Map[String, (SparkSession, String) => DataFrame] = Map(

@@ -717,12 +717,11 @@ object ScaleOps extends QueryModule {
   private def rebalanceWrite(s: SparkSession, d: String): DataFrame = {
     import s.implicits._
     val dir = Tbl.scratchDir("rebalance_out")
-    Tbl.events(s, d)
-      .select($"event_id", $"event_type", $"user_id",
-              Tbl.cents($"value").as("v_c"))
-      .createOrReplaceTempView("ev_rb")
-    s.sql("SELECT /*+ REBALANCE(event_type) */ * FROM ev_rb")
-      .write.mode("overwrite").parquet(dir)
+    val ev = Tbl.events(s, d)
+      .select($"event_id", $"event_type", $"user_id", Tbl.cents($"value").as("v_c"))
+    Tbl.withViews(s, "ev_rb" -> ev) {
+      s.sql("SELECT /*+ REBALANCE(event_type) */ * FROM ev_rb")
+    }.write.mode("overwrite").parquet(dir)
     s.read.parquet(dir)
       .groupBy($"event_type")
       .agg(count(lit(1)).as("n"), sum($"v_c").as("sum_v_c"),
@@ -780,21 +779,13 @@ object ScaleOps extends QueryModule {
     * side always eligible, broadcast off (the injection targets
     * shuffle joins — a broadcast join already prunes at the probe).
     * `build` constructs the plan and `use` must EXECUTE it before this
-    * returns; confs are restored in finally. */
+    * returns; the confs are scoped to this call. */
   private[graft] def withRuntimeFilterConf[T](s: SparkSession)
       (build: => DataFrame)(use: DataFrame => T): T = {
-    val keys = Seq(
-      "spark.sql.optimizer.runtime.bloomFilter.enabled",
-      "spark.sql.optimizer.runtime.bloomFilter.applicationSideScanSizeThreshold",
-      "spark.sql.autoBroadcastJoinThreshold")
-    val old = keys.map(k => k -> s.conf.getOption(k))
-    try {
-      s.conf.set(keys(0), "true")
-      s.conf.set(keys(1), "0")
-      s.conf.set(keys(2), "-1")
-      use(build)
-    } finally old.foreach { case (k, v) =>
-      v.fold(s.conf.unset(k))(s.conf.set(k, _)) }
+    Tbl.withConf(s, Seq(
+      "spark.sql.optimizer.runtime.bloomFilter.enabled" -> "true",
+      "spark.sql.optimizer.runtime.bloomFilter.applicationSideScanSizeThreshold" -> "0",
+      "spark.sql.autoBroadcastJoinThreshold" -> "-1"))(use(build))
   }
 
   private val runtimeFilterSql =

@@ -741,10 +741,9 @@ object TextOps extends QueryModule {
     // partition count sized to that, not the session default (same
     // scoped override + single-threaded-engine assumption as
     // dupClusters; restored in finally)
-    val prevParts = s.conf.get("spark.sql.shuffle.partitions")
-    s.conf.set("spark.sql.shuffle.partitions", "4")
-    try bpeMergesLoop(s, docs, k)
-    finally s.conf.set("spark.sql.shuffle.partitions", prevParts)
+    Tbl.withConf(s, Seq("spark.sql.shuffle.partitions" -> "4")) {
+      bpeMergesLoop(s, docs, k)
+    }
   }
 
   private def bpeMergesLoop(s: SparkSession, docs: DataFrame,

@@ -108,16 +108,21 @@ class StatefulOpsSpec extends SparkSpec {
 
   test("engine default: stateful streams run on the RocksDB state store") {
     // drive a stateful query through the real engine entry point, then
-    // inspect the checkpoint it wrote: RocksDB (with changelog
-    // checkpointing) leaves {version}.changelog / .zip artifacts under
-    // state/, while the heap-backed HDFS provider writes {version}.delta
-    // — so the artifact shapes pin WHICH provider actually ran, not just
-    // which conf was requested
+    // inspect the checkpoint it wrote: the provider the run was started
+    // with is recorded in the offset log's conf metadata, and RocksDB
+    // (with changelog checkpointing) leaves {version}.changelog / .zip
+    // artifacts under state/, while the heap-backed HDFS provider writes
+    // {version}.delta — so the artifact shapes pin WHICH provider
+    // actually ran, not just which conf was requested
     SparkEntry.queries("s4_stream_dedup")(spark, "/root/testdata/sf0.001").count()
-    assert(spark.conf.get("spark.sql.streaming.stateStore.providerClass")
-      .contains("RocksDBStateStoreProvider"))
     val ckpt = graft.streaming.StreamingOps.lastCheckpointDir
-    assert(ckpt.nonEmpty, "runToTable recorded no checkpoint dir")
+    assert(ckpt.nonEmpty, "the stream run recorded no checkpoint dir")
+    val offsets = new String(java.nio.file.Files.readAllBytes(
+      java.nio.file.Paths.get(ckpt, "offsets", "0")), "UTF-8")
+    val provider = "\"spark.sql.streaming.stateStore.providerClass\":\"([^\"]+)\"".r
+      .findFirstMatchIn(offsets).map(_.group(1))
+    assert(provider.exists(_.endsWith("RocksDBStateStoreProvider")),
+      s"offset-log provider: $provider")
     def walk(f: java.io.File): Seq[java.io.File] =
       if (f.isDirectory) Option(f.listFiles).toSeq.flatten.flatMap(walk) else Seq(f)
     val names = walk(new java.io.File(ckpt, "state")).map(_.getName)
@@ -125,25 +130,6 @@ class StatefulOpsSpec extends SparkSpec {
       s"no RocksDB state artifacts under $ckpt/state: ${names.take(20)}")
     assert(!names.exists(_.endsWith(".delta")),
       s"heap-provider .delta files under $ckpt/state: ${names.take(20)}")
-  }
-
-  test("s11 pins RocksDB even when the session overrides the provider knob") {
-    // transformWithState cannot run on the heap provider; a session-wide
-    // spark.graft.stateStoreProvider override must not crash s11 (it
-    // pins RocksDB locally and restores the override afterwards)
-    val prev = spark.conf.getOption("spark.graft.stateStoreProvider")
-    spark.conf.set("spark.graft.stateStoreProvider",
-      "org.apache.spark.sql.execution.streaming.state.HDFSBackedStateStoreProvider")
-    try {
-      val n = SparkEntry.queries("s11_stream_tws")(spark, "/root/testdata/sf0.001").count()
-      assert(n > 0)
-      assert(spark.conf.get("spark.graft.stateStoreProvider")
-               .contains("HDFSBackedStateStoreProvider"),
-             "session override must survive the s11-local pin")
-    } finally prev match {
-      case Some(p) => spark.conf.set("spark.graft.stateStoreProvider", p)
-      case None => spark.conf.unset("spark.graft.stateStoreProvider")
-    }
   }
 
   test("RocksDB state survives stop/restart: changelog recovery continues the aggregate") {
