@@ -1,7 +1,6 @@
 package graft
 import scala.util.control.NonFatal
 
-import org.apache.spark.sql.SparkSession
 object Bench {
   /** Full materialization via the noop DSv2 sink — every output column
     * is computed and every operator executes, unlike `.count()`, which
@@ -19,27 +18,17 @@ object Bench {
     df.write.mode("overwrite").format("noop").save()
 
   def main(args: Array[String]): Unit = {
-    JvmOpens.check() // fail fast on a bare-java launch (see JvmOpens)
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")
-      .config("spark.local.dir", graft.Tbl.sparkLocalDir)
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val cpus = Local.cpus
+    val spark = Local.session()
     // untimed warmup: JVM/codegen/parquet-footer costs land here, not on
     // whichever query the Map happens to order first. The streaming
     // warmup matters most: the first StreamingQuery in a session pays
     // ~2.5s of one-time machinery init (state store, commit log, sink
     // classes, JIT) that otherwise lands on one measured query.
-    try materialize(SparkEntry.entry(spark)) catch { case NonFatal(_) => }
-    try {
-      materialize(SparkEntry.queries("s5_stream_complete")(spark, "/root/testdata/sf0.001"))
-      spark.catalog.clearCache()
-      spark.sqlContext.tableNames().foreach(spark.catalog.dropTempView)
-    } catch { case NonFatal(_) => }
+    Local.run(spark, "q1_pricing_summary", "/root/testdata/sf0.001")(materialize)
+    Local.run(spark, "s5_stream_complete", "/root/testdata/sf0.001")(materialize)
+    Local.reset(spark)
     // host-contention self-adjudication (round-10 verdict item #3):
     // every round since r2 some entries inflate 2-30x under external
     // load and settling "regression or noise?" has needed a judge
@@ -64,31 +53,22 @@ object Bench {
     // A query that throws in either run is not timed: it is listed under
     // "failed" with its error class, and its time stays out of
     // "queries", "top_queries" and the total.
-    val attempts = SparkEntry.queries.map { case (name, fn) =>
+    val attempts = SparkEntry.queries.keys.toSeq.map { name =>
       name -> (1 to 2).map { _ =>
         val l0 = loadAvg
         val c0 = CpuMeter.snap()
         val t0 = System.nanoTime()
-        val err =
-          try { materialize(fn(spark, sfDir)); None }
-          catch { case NonFatal(e) =>
-            System.err.println(s"[bench] $name failed: $e")
-            Some(e.getClass.getName)
-          }
+        val err = Local.run(spark, name, sfDir)(materialize)
         val t = (System.nanoTime() - t0) / 1e9
         val cd = CpuMeter.delta(c0, CpuMeter.snap())
-        // drop cached relations and temp views a query left behind so
-        // they cannot degrade later queries
-        spark.catalog.clearCache()
-        spark.sqlContext.tableNames().foreach(spark.catalog.dropTempView)
+        Local.reset(spark)
         (t, l0, cd, err)
       }
-    }
+    }.toMap
     val failed = attempts.toSeq.sortBy(_._1).flatMap { case (name, runs) =>
       runs.flatMap(_._4).headOption.map(name -> _)
     }
-    val failedJson = failed
-      .map { case (k, e) => s"""{"query":"$k","error":"$e"}""" }.mkString("[", ",", "]")
+    val failedJson = Local.failedJson(failed)
     // keep the load/CPU deltas sampled around the run that won the
     // min: that is the run the reported number came from
     val results = attempts.collect { case (name, runs) if runs.forall(_._4.isEmpty) =>

@@ -52,10 +52,7 @@ object StreamBench {
   final case class Ring(ids: List[Long])
 
   def main(args: Array[String]): Unit = {
-    JvmOpens.check() // fail fast on a bare-java launch (see JvmOpens)
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/tmp/graft_sf10")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS",
-      Runtime.getRuntime.availableProcessors.toString)
     val chunks = sys.env.getOrElse("SPARK_GRAFT_STREAM_CHUNKS", "20").toInt
     // comma-separated layout filter for big replays (100M-row runs pay
     // ~10 min/layout; the third-decade evidence only needs the bounded
@@ -63,25 +60,9 @@ object StreamBench {
     val only: Set[String] = sys.env.get("SPARK_GRAFT_STREAM_QUERIES")
       .map(_.split(",").map(_.trim).filter(_.nonEmpty).toSet)
       .getOrElse(Set.empty)
-    val b = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")
-      .config("spark.local.dir", Tbl.sparkLocalDir)
-    // experiment knob (same contract as TimeOne): SPARK_GRAFT_CONF=
-    // "k=v;k2=v2" extra session confs — how the snapshot-cadence
-    // experiments below steer minDeltasForSnapshot without a rebuild
-    sys.env.get("SPARK_GRAFT_CONF").toSeq
-      .flatMap(_.split(';')).map(_.trim).filter(_.nonEmpty)
-      .foreach { kv =>
-        kv.split("=", 2) match {
-          case Array(k, v) => b.config(k, v)
-          case _ => throw new IllegalArgumentException(
-            s"SPARK_GRAFT_CONF entry '$kv' is not of the form key=value")
-        }
-      }
-    val spark = b.getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    // SPARK_GRAFT_CONF (see Local) steers e.g. the snapshot-cadence
+    // experiments' minDeltasForSnapshot without a rebuild
+    val spark = Local.session()
     graft.streaming.StreamingOps.configureStreaming(spark)
     // state size IS the deliverable of this bench — pay the tracking cost
     spark.conf.set(
@@ -359,19 +340,10 @@ object StreamBench {
       // JSON-escaped: a quote/backslash/control char in an env-provided
       // tag or conf value must not corrupt the JSONL line that
       // cross-round consumers parse (round-13 ADVICE)
-      def jesc(s: String): String = s.flatMap {
-        case '"'  => "\\\""
-        case '\\' => "\\\\"
-        case '\n' => "\\n"
-        case '\r' => "\\r"
-        case '\t' => "\\t"
-        case c if c < ' ' => f"\\u${c.toInt}%04x"
-        case c => c.toString
-      }
-      val tag = jesc(sys.env.getOrElse("SPARK_GRAFT_STREAM_TAG", "default"))
-      val conf = jesc(sys.env.getOrElse("SPARK_GRAFT_CONF", ""))
+      val tag = Local.jstr(sys.env.getOrElse("SPARK_GRAFT_STREAM_TAG", "default"))
+      val conf = Local.jstr(sys.env.getOrElse("SPARK_GRAFT_CONF", ""))
       val line =
-        s"""{"query":"$name","tag":"$tag","conf":"$conf","sf":"${jesc(sfDir)}","chunks":$chunks,"rows_total":$rowsTotal,""" +
+        s"""{"query":"$name","tag":$tag,"conf":$conf,"sf":${Local.jstr(sfDir)},"chunks":$chunks,"rows_total":$rowsTotal,""" +
         restartExtra +
         s""""wall_s":$wall,"rows_per_s":${(rowsTotal / wall).toLong},""" +
         s""""growth_last_over_first":$growthJson,""" +

@@ -26,13 +26,20 @@ object Tbl {
   def region(s: SparkSession, d: String): DataFrame   = apply(s, d, "region")
   /** events.ts physical type has drifted across driver testdata
     * generations: TIMESTAMP(NANOS) originally, TIMESTAMP(MICROS,
-    * isAdjustedToUTC=false) since 2026-08. Detect the footer type once
-    * per directory (cached) and normalize every variant to the SAME
+    * isAdjustedToUTC=false) since 2026-08. The footer schema is inferred
+    * once per file (cached) and every variant is normalized to the SAME
     * TimestampType epoch-micros column, so nothing downstream ever sees
     * the drift. */
-  private val tsTypeCache =
-    new java.util.concurrent.ConcurrentHashMap[String, org.apache.spark.sql.types.DataType]()
-  private[graft] def eventsTsType(s: SparkSession, d: String): org.apache.spark.sql.types.DataType = {
+  private val eventsSchemaCache =
+    new java.util.concurrent.ConcurrentHashMap[String, org.apache.spark.sql.types.StructType]()
+
+  /** The parquet reader flag that reads TIMESTAMP(NANOS) as a raw long.
+    * The reader consults it when a query executes, so a nanos file needs
+    * it set on the session for as long as its result is read. */
+  private[graft] val NanosAsLong = "spark.sql.legacy.parquet.nanosAsLong"
+
+  /** events.parquet's schema, nanos ts read as LongType. */
+  private[graft] def eventsSchema(s: SparkSession, d: String): org.apache.spark.sql.types.StructType = {
     val p = s"$d/events.parquet"
     // size+mtime in the key: a file REGENERATED in place (the driver
     // does this across rounds) re-infers instead of serving the stale
@@ -41,31 +48,35 @@ object Tbl {
     // is idempotent and putIfAbsent keeps the first
     val f = new java.io.File(p)
     val key = s"$p|${f.length}|${f.lastModified}"
-    val cached = tsTypeCache.get(key)
+    val cached = eventsSchemaCache.get(key)
     if (cached != null) cached else {
-      s.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-      val dt = s.read.parquet(p).schema("ts").dataType
-      tsTypeCache.putIfAbsent(key, dt)
-      dt
+      val sch = withConf(s, Seq(NanosAsLong -> "true"))(s.read.parquet(p).schema)
+      eventsSchemaCache.putIfAbsent(key, sch)
+      sch
     }
   }
 
+  private[graft] def eventsTsType(s: SparkSession, d: String): org.apache.spark.sql.types.DataType =
+    eventsSchema(s, d)("ts").dataType
+
   def events(s: SparkSession, d: String): DataFrame = {
     import org.apache.spark.sql.types._
-    s.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    eventsTsType(s, d) match {
+    val p = s"$d/events.parquet"
+    val sch = eventsSchema(s, d)
+    sch("ts").dataType match {
       case LongType =>
         // ns-as-long (legacy conf): data is µs-precision, `ns div 1000`
         // is lossless and matches DuckDB's epoch_us exactly
-        apply(s, d, "events").withColumn("ts", timestamp_micros(expr("ts div 1000")))
+        s.conf.set(NanosAsLong, "true")
+        s.read.schema(sch).parquet(p)
+          .withColumn("ts", timestamp_micros(expr("ts div 1000")))
       case TimestampNTZType =>
         // NTZ µs: an explicit LTZ schema makes the parquet reader take
         // the raw int64 micros as epoch-micros — bit-identical to the
         // ns-file path (driver wall-clock is UTC = epoch)
-        val sch = StructType(apply(s, d, "events").schema.map(f =>
-          if (f.name == "ts") f.copy(dataType = TimestampType) else f))
-        s.read.schema(sch).parquet(s"$d/events.parquet")
-      case _ => apply(s, d, "events") // already LTZ micros (our own writers)
+        s.read.schema(StructType(sch.map(f =>
+          if (f.name == "ts") f.copy(dataType = TimestampType) else f))).parquet(p)
+      case _ => s.read.schema(sch).parquet(p) // already LTZ micros (our own writers)
     }
   }
   def documents(s: SparkSession, d: String): DataFrame  = apply(s, d, "documents")

@@ -1,61 +1,30 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
-  * plus oracle_sql.json, for the driver's DuckDB compare. */
+  * plus oracle_sql.json, for the driver's DuckDB compare. Queries that
+  * threw are printed as `{"failed":[{"query":…,"error":…}]}` (Bench's
+  * shape), and the exit status is nonzero if there are any. */
 object Verify {
   def main(args: Array[String]): Unit = {
-    JvmOpens.check() // fail fast on a bare-java launch (see JvmOpens)
     val (sfDir, outDir) = (args(0), args(1))
     // optional 3rd arg: comma-separated query names (fast local iteration)
     val only: Set[String] =
       if (args.length > 2) args(2).split(",").toSet else Set.empty
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      // streaming embodiments land in a memory sink before the parquet
-      // dump; at sf10 (10M events) a windowed agg's sink rows exceed the
-      // 1g default. Single-JVM local mode: "driver results" and executor
-      // memory are the same heap, so the cap is pure ceremony here — a
-      // cluster deployment sinks to files/kafka, never collect
-      .config("spark.driver.maxResultSize", "8g")
-      .config("spark.ui.enabled", "false")
-      .config("spark.local.dir", graft.Tbl.sparkLocalDir)
-      .getOrCreate()
-    // INFO shows BlockManager eviction decisions (the small-heap stress
-    // repro of the round-13 gate crash reads block ids from it)
-    spark.sparkContext.setLogLevel(
-      sys.env.getOrElse("SPARK_GRAFT_LOG_LEVEL", "WARN"))
+    val spark = Local.session()
     new java.io.File(outDir).mkdirs()
-    SparkEntry.queries
-      .filter { case (name, _) => only.isEmpty || only(name) }
-      .foreach { case (name, fn) =>
-      try fn(spark, sfDir).coalesce(1).write.mode("overwrite")
-        .parquet(s"$outDir/$name")
-      catch { case e: Throwable =>
-        System.err.println(s"[verify] $name failed: ${e.getMessage}")
+    val failed = SparkEntry.queries.keys.toSeq
+      .filter(name => only.isEmpty || only(name))
+      .flatMap { name =>
+        val err = Local.run(spark, name, sfDir)(
+          _.coalesce(1).write.mode("overwrite").parquet(s"$outDir/$name"))
+        Local.reset(spark)
+        err.map(name -> _)
       }
-      // drop memory-sink tables left by streaming queries
-      spark.catalog.clearCache()
-      spark.sqlContext.tableNames().foreach(spark.catalog.dropTempView)
-    }
-    // JSON string escape: backslash, quote, and ALL control chars (<0x20)
-    // — a tab or CR in builder-authored SQL would otherwise make the
-    // driver's json.load fail and silently zero the round's correctness.
-    def q(s: String): String = "\"" + s.flatMap {
-      case '"'  => "\\\""
-      case '\\' => "\\\\"
-      case '\n' => "\\n"
-      case '\r' => "\\r"
-      case '\t' => "\\t"
-      case c if c < ' ' => f"\\u${c.toInt}%04x"
-      case c => c.toString
-    } + "\""
     val json = SparkEntry.oracleSql
-      .map { case (k, v) => s"${q(k)}: ${q(v)}" }.mkString("{", ",", "}")
+      .map { case (k, v) => s"${Local.jstr(k)}: ${Local.jstr(v)}" }.mkString("{", ",", "}")
     Files.writeString(Paths.get(s"$outDir/oracle_sql.json"), json)
+    println(s"""{"failed":${Local.failedJson(failed.sortBy(_._1))}}""")
     spark.stop()
+    if (failed.nonEmpty) sys.exit(1)
   }
 }

@@ -85,7 +85,7 @@ object FuzzyJoinOps extends QueryModule {
   /** The deletion-neighborhood BLOCKING relation of `(id, name)` rows:
     * every string reachable by ≤ k deletions, keyed as `(id,
     * kh = xxhash64(variant))`, hash-deduped. Exposed (not inlined in
-    * [[editDistancePairsK]]) so `Audit j9skew` measures the EXACT
+    * [[editDistancePairsK]]) so `Tools j9skew` measures the EXACT
     * relation the query joins — a hand-copied expression would silently
     * drift if this construction changes (round-8 ADVICE). */
   private[graft] def deletionKeyed(rel: DataFrame, k: Int): DataFrame = {
@@ -138,7 +138,7 @@ object FuzzyJoinOps extends QueryModule {
     // any size. The hint restores the designed equi-join-on-the-
     // exchange: both sides share ONE reused exchange on kh (self-join),
     // the build side is a per-partition slice of near-singleton buckets
-    // (Audit j9skew), and no SMJ sort is paid.
+    // (`Tools j9skew`), and no SMJ sort is paid.
     val candidates = keyed.select($"id".as("id_a"), $"kh")
       .join(keyed.select($"id".as("id_b"), $"kh").hint("shuffle_hash"), "kh")
       .where($"id_a" < $"id_b")

@@ -34,12 +34,12 @@ object GraphOps extends QueryModule {
   /** Per-round lineage truncation for the iterative loops below.
     * Measurement-only escape hatch (guide §1/§7.2): with
     * SPARK_GRAFT_UNROLL_PLANS=1 the checkpoint is elided so
-    * `graft.Explain` can print the full UNROLLED plan — otherwise every
+    * `graft.Tools explain` can print the full UNROLLED plan — otherwise every
     * round's explain collapses to `Scan ExistingRDD` at the checkpoint
     * boundary and the per-round operator shape is invisible. Execution
     * paths (Verify/Bench) never set it; semantics are identical either
     * way (localCheckpoint only truncates lineage). Gated on a SYSTEM
-    * PROPERTY that only graft.Explain translates the env var into —
+    * PROPERTY that only `graft.Tools explain` translates the env var into —
     * never a free-floating env read here — so an UNROLL var inherited
     * by a Bench/Verify shell cannot silently hand those runs deeply
     * nested per-round plans (round-15 ADVICE). */

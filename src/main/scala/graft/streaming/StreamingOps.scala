@@ -54,8 +54,9 @@ object StreamingOps extends QueryModule {
     * sentinels from results by their negative user_id at the OUTPUT. */
   private def eventStream(s: SparkSession, d: String,
                           sentinelTypes: Seq[String]): DataFrame = {
-    s.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     val tsNanos = Tbl.eventsTsType(s, d) == LongType
+    // the stream's reader reads nanos as long only with the flag set
+    if (tsNanos) s.conf.set(Tbl.NanosAsLong, "true")
     val dir = java.nio.file.Paths.get(Tbl.scratchDir("events_stream"))
     Files.createSymbolicLink(dir.resolve("events.parquet"),
                              java.nio.file.Paths.get(s"$d/events.parquet"))

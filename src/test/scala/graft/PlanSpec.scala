@@ -145,9 +145,8 @@ class PlanSpec extends SparkSpec with AdaptiveSparkPlanHelper {
     // a ReusedExchange of it), and every exchange ABOVE the verify join
     // carries ids/cosine only — a pair-level payload exchange is the
     // 22 KB/vector spill this path exists to prevent
-    sys.props("graft.emb.neardup") = "fused"
-    try withSQLConf("spark.sql.autoBroadcastJoinThreshold" -> "-1",
-                    "spark.sql.adaptive.autoBroadcastJoinThreshold" -> "-1") {
+    withSQLConf("spark.sql.autoBroadcastJoinThreshold" -> "-1",
+                "spark.sql.adaptive.autoBroadcastJoinThreshold" -> "-1") {
       val p = executed(SparkEntry.queries("sim_emb_neardup")(spark, d))
       val nested = collectWithSubqueries(p) {
         case j: org.apache.spark.sql.execution.joins.CartesianProductExec => j
@@ -166,7 +165,7 @@ class PlanSpec extends SparkSpec with AdaptiveSparkPlanHelper {
       }
       assert(reused.nonEmpty,
         s"self-join's second side must reuse the signature exchange:\n$p")
-    } finally sys.props.remove("graft.emb.neardup")
+    }
   }
 
   test("repetition metrics are map-only: per-doc signals never shuffle") {

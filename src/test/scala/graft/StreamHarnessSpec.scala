@@ -6,24 +6,22 @@ import scala.util.control.NonFatal
   * only through its result. Every registered query runs at sf0.001 and
   * is fully materialised (`Bench.materialize`); afterwards the session
   * conf, the temp views and the set of active streams must be exactly
-  * what they were before it. The one tolerated conf is the
-  * nanos-as-long parquet flag, which `Tbl.events` sets on every call and
-  * a stream's lazily-read result still depends on after it returns. */
+  * what they were before it. (Only a TIMESTAMP(NANOS) events file sets
+  * a conf for good, `Tbl.NanosAsLong`; the test data is µs.) */
 class StreamHarnessSpec extends SparkSpec {
   private val d = "/root/testdata/sf0.001"
-  private val NanosAsLong = "spark.sql.legacy.parquet.nanosAsLong"
 
   private def tempViews: Set[String] =
     spark.catalog.listTables().collect().filter(_.isTemporary).map(_.name).toSet
 
   test("every registry query leaves conf, temp views and streams as it found them") {
     val leaks = SparkEntry.queries.keys.toSeq.sorted.flatMap { name =>
-      val conf0 = spark.conf.getAll - NanosAsLong
+      val conf0 = spark.conf.getAll
       val views0 = tempViews
       val failed =
         try { Bench.materialize(SparkEntry.queries(name)(spark, d)); Nil }
         catch { case NonFatal(e) => Seq(s"failed: ${e.getClass.getName}") }
-      val conf1 = spark.conf.getAll - NanosAsLong
+      val conf1 = spark.conf.getAll
       val confDiff = (conf0.keySet ++ conf1.keySet).toSeq.sorted
         .filter(k => conf0.get(k) != conf1.get(k))
         .map(k => s"conf $k: ${conf0.get(k)} -> ${conf1.get(k)}")
@@ -49,7 +47,7 @@ class StreamHarnessSpec extends SparkSpec {
       // s5 is stateful (its state partitions are sized per run) and
       // touches every streaming key the harness scopes
       assert(SparkEntry.queries("s5_stream_complete")(spark, d).count() == 5)
-      assert(spark.conf.getAll - NanosAsLong == caller - NanosAsLong)
+      assert(spark.conf.getAll == caller)
       assert(spark.conf.get(noData) == "true")
       assert(!spark.conf.getAll.contains(provider))
       assert(spark.conf.get(shuffle) == before(shuffle))

@@ -56,7 +56,7 @@ JVM_OPTS=$(java -cp "$CP" graft.JvmOpens)
 # run's dirs keep fresh mtimes (shuffle/temp churn), while genuinely
 # leaked dirs from a crashed JVM age past the guard and get swept on
 # the next gate.
-if ! pgrep -f 'graft\.(Verify|Bench|StreamBench|TimeOne|Audit|Explain)' >/dev/null; then
+if ! pgrep -f 'graft\.(Verify|Bench|StreamBench|Tools)' >/dev/null; then
   for d in /dev/shm/graft_local/blockmgr-* /dev/shm/graft_local/spark-*; do
     [ -e "$d" ] || continue
     if [ -z "$(find "$d" -maxdepth 0 -mmin -120 2>/dev/null)" ]; then
@@ -111,5 +111,7 @@ for chunk in $(echo "$REST" | paste -sd' ' - | tr ' ' '\n' | awk '{print $0}' | 
   i=$((i+1))
 done
 wait
+# nonzero when the engine crashed OR any query threw: Verify prints the
+# thrown queries as {"failed":[...]} in $OUT/verify.log and exits 1
 echo "engine_exit=$ENGINE_EXIT" >> "$LOG"
 grep -c " PASS " "$LOG"
