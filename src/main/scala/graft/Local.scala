@@ -10,8 +10,10 @@ object Local {
   val cpus: Int = sys.env.get("SPARK_GRAFT_CPUS").map(_.trim.toInt)
     .getOrElse(Runtime.getRuntime.availableProcessors)
 
-  /** Extra session confs for experiments: `SPARK_GRAFT_CONF="k=v;k2=v2"`. */
-  private def extraConf: Seq[(String, String)] =
+  /** Extra session confs for experiments: `SPARK_GRAFT_CONF="k=v;k2=v2"`.
+    * Only the experiment mains (StreamBench, Tools) pass these to
+    * [[session]]; Bench and Verify must not pick up a stray env var. */
+  def envConf: Seq[(String, String)] =
     sys.env.get("SPARK_GRAFT_CONF").toSeq
       .flatMap(_.split(';')).map(_.trim).filter(_.nonEmpty)
       .map { kv =>
@@ -22,7 +24,7 @@ object Local {
         }
       }
 
-  def session(): SparkSession = {
+  def session(extra: Seq[(String, String)] = Nil): SparkSession = {
     JvmOpens.check() // fail fast on a bare-java launch (see JvmOpens)
     val b = SparkSession.builder()
       .master(s"local[$cpus]")
@@ -35,16 +37,20 @@ object Local {
       // exceed the 1g default. In local mode "driver results" and
       // executor memory are the same heap, so the cap only gets in the way
       .config("spark.driver.maxResultSize", "8g")
-    extraConf.foreach { case (k, v) => b.config(k, v) }
+    extra.foreach { case (k, v) => b.config(k, v) }
     val s = b.getOrCreate()
     s.sparkContext.setLogLevel("WARN")
     s
   }
 
+  // built once: `SparkEntry.queries` re-wraps every module's map per call,
+  // which must not land inside a caller's timed span
+  private lazy val registry = SparkEntry.queries
+
   /** Builds the registered query `name` on `sfDir` and applies `act` to
     * it. Returns the exception class if building or `act` threw. */
   def run(s: SparkSession, name: String, sfDir: String)(act: DataFrame => Unit): Option[String] =
-    try { act(SparkEntry.queries(name)(s, sfDir)); None }
+    try { act(registry(name)(s, sfDir)); None }
     catch { case NonFatal(e) =>
       System.err.println(s"[$name] failed: $e")
       Some(e.getClass.getName)

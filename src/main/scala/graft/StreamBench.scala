@@ -60,9 +60,9 @@ object StreamBench {
     val only: Set[String] = sys.env.get("SPARK_GRAFT_STREAM_QUERIES")
       .map(_.split(",").map(_.trim).filter(_.nonEmpty).toSet)
       .getOrElse(Set.empty)
-    // SPARK_GRAFT_CONF (see Local) steers e.g. the snapshot-cadence
+    // SPARK_GRAFT_CONF (see Local.envConf) steers e.g. the snapshot-cadence
     // experiments' minDeltasForSnapshot without a rebuild
-    val spark = Local.session()
+    val spark = Local.session(Local.envConf)
     graft.streaming.StreamingOps.configureStreaming(spark)
     // state size IS the deliverable of this bench — pay the tracking cost
     spark.conf.set(

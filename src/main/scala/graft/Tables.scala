@@ -143,7 +143,7 @@ object Tbl {
 
   /** Cached per-file parquet row-group counts for the fan-out probe.
     * Key includes size+mtime so a file regenerated in place re-probes —
-    * the same discipline as [[eventsTsType]]'s cache. */
+    * the same discipline as [[eventsSchema]]'s cache. */
   private val rowGroupCache =
     scala.collection.concurrent.TrieMap.empty[String, Int]
 

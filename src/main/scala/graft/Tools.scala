@@ -18,7 +18,8 @@ import org.apache.spark.sql.functions._
   *     Key distribution of the ed≤2 fuzzy join's blocking relation.
   *
   * sfDir is a trailing directory argument, else `SPARK_GRAFT_SF_DIR`.
-  * The exit status is nonzero if any query threw. */
+  * `SPARK_GRAFT_CONF` adds session confs (see `Local.envConf`). The
+  * exit status is nonzero if any query threw. */
 object Tools {
   def main(args: Array[String]): Unit = {
     val (cmd, rest) = (args.headOption.getOrElse(""), args.toSeq.drop(1))
@@ -41,7 +42,7 @@ object Tools {
     // shell must not change those runs' plans (r15 ADVICE)
     if (cmd == "explain" && sys.env.contains("SPARK_GRAFT_UNROLL_PLANS"))
       System.setProperty("graft.unrollPlans", "1")
-    val spark = Local.session()
+    val spark = Local.session(Local.envConf)
     val failed = cmd match {
       case "time" => time(spark, names, dir)
       case "explain" => explain(spark, names, dir)

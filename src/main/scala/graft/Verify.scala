@@ -12,6 +12,11 @@ object Verify {
       if (args.length > 2) args(2).split(",").toSet else Set.empty
     val spark = Local.session()
     new java.io.File(outDir).mkdirs()
+    // first, so a JVM-fatal error mid-loop still leaves the oracle SQL
+    // (and a watcher can check outputs as they land)
+    val json = SparkEntry.oracleSql
+      .map { case (k, v) => s"${Local.jstr(k)}: ${Local.jstr(v)}" }.mkString("{", ",", "}")
+    Files.writeString(Paths.get(s"$outDir/oracle_sql.json"), json)
     val failed = SparkEntry.queries.keys.toSeq
       .filter(name => only.isEmpty || only(name))
       .flatMap { name =>
@@ -20,9 +25,6 @@ object Verify {
         Local.reset(spark)
         err.map(name -> _)
       }
-    val json = SparkEntry.oracleSql
-      .map { case (k, v) => s"${Local.jstr(k)}: ${Local.jstr(v)}" }.mkString("{", ",", "}")
-    Files.writeString(Paths.get(s"$outDir/oracle_sql.json"), json)
     println(s"""{"failed":${Local.failedJson(failed.sortBy(_._1))}}""")
     spark.stop()
     if (failed.nonEmpty) sys.exit(1)

@@ -4,15 +4,14 @@
 # sinks, check the handful of slow oracles as their outputs land, then
 # drain the remainder with 4 parallel check.py workers.
 #
-# Usage: tools/gate_sf10.sh <sfDir> <outDir> <seedOracleJson> <resultLog>
+# Usage: tools/gate_sf10.sh <sfDir> <outDir> <resultLog>
 #   sfDir          e.g. /tmp/graft_sf10p  (gen_sf.py output)
-#   outDir         scratch dir for Verify parquet dumps
-#   seedOracleJson oracle_sql.json from ANY prior Verify run — Verify
-#                  only writes its own at the very END, and the overlap
-#                  watcher needs the SQL before that
+#   outDir         scratch dir for Verify parquet dumps (Verify writes
+#                  its oracle_sql.json there before the first query, so
+#                  the overlap watcher has the SQL as outputs land)
 #   resultLog      where check.py lines accumulate (one line per query)
 #
-# Optional: $5 = comma-separated query subset (resume after a crash —
+# Optional: $4 = comma-separated query subset (resume after a crash —
 # pass the not-yet-dumped names and keep OUT in place); GATE_HEAP
 # overrides the engine heap (default 64g, the round-13 sweet spot: 96g
 # left no headroom beside the overlapped DuckDB oracle workers and the
@@ -24,14 +23,12 @@
 set -u
 SF=${1:?sfDir}
 OUT=${2:?outDir}
-SEED=${3:?seed oracle_sql.json}
-LOG=${4:?result log}
-ONLY=${5:-}
+LOG=${3:?result log}
+ONLY=${4:-}
 HEAP=${GATE_HEAP:-64g}
 REPO="$(cd "$(dirname "$0")/.." && pwd)"
 cd "$REPO"
 mkdir -p "$OUT"
-cp "$SEED" "$OUT/oracle_sql.json"
 : > "$LOG"
 export CHECK_CACHE=${CHECK_CACHE:-/tmp/graft_oracle_cache_sf10}
 
